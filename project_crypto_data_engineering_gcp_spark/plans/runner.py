@@ -1,8 +1,9 @@
 """Pipeline runner: the engine's control plane (replaces the reference's
 Airflow DAG + Cloud Run + Dataproc submission, `4-dag_assats-list-full.py`).
 
-One driver process runs the stages sequentially; each stage is a plain
-function over DataFrames so the same code runs under any scheduler.
+One driver process runs the stages sequentially (Gold's four table sinks
+run concurrently inside their stage); each stage is a plain function over
+DataFrames so the same code runs under any scheduler.
 
 Sink layout (all local-FS/parquet here; the paths are opaque URIs, so
 s3://... works unchanged):
@@ -21,11 +22,18 @@ from __future__ import annotations
 
 import hashlib
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..sources.json_source import read_raw_json
-from ..sources.ledger import filter_new_files, read_ledger, record_ingested
+from ..sources.ledger import (
+    glob_escape,
+    list_landing,
+    read_ledger,
+    record_ingested,
+)
 from ..sources.sinks import (
     formatted,
     read_history,
@@ -66,96 +74,129 @@ def run_silver(
     append to the partitioned Silver table, record them. Returns rows
     appended.
 
+    New files are found on the driver before any scan: the landing glob
+    is listed and the ledger's paths are subtracted, and only the rest
+    reach the JSON reader — the reference's rename-to-``read_*`` pruning
+    (`2:69-87`) without mutating the landing. A cycle parses the new
+    snapshot, not the landed history; with nothing new it returns 0
+    without a Spark job.
+
     ``require_input=True`` replays the reference's landing-validation
     gate (S10, the DAG's poll-for-files sensor `4-dag:53-81`): fail
-    loudly when the glob matches NO snapshot files at all, instead of
-    silently writing no Silver rows. With ``require_input=False`` an
-    unmatched glob is a graceful no-op (0 rows) — the shape a poller
-    wants. Already-ledgered files always count as input — a rerun over
-    fully-processed landings stays a no-op either way."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        raw = read_raw_json(spark, landing_glob)
-        empty = raw.isEmpty()
-    except AnalysisException as e:  # Spark raises PATH_NOT_FOUND on 0-match globs
-        if "PATH_NOT_FOUND" not in str(e):
-            raise
-        raw, empty = None, True
-    if empty:
-        if require_input:
-            raise FileNotFoundError(
-                f"landing glob {landing_glob!r} matched no snapshot files "
-                "(reference S10 validation gate; pass require_input=False "
-                "to allow an empty landing)"
-            )
-        if raw is None:
-            return 0
-    ledger = read_ledger(spark, out_dir)
-    fresh = filter_new_files(raw, ledger)
-
+    loudly when the glob matches NO snapshot files at all — or only
+    corrupt ones — instead of silently writing no Silver rows. With
+    ``require_input=False`` an unmatched glob is a graceful no-op (0
+    rows) — the shape a poller wants. Already-ledgered files always count
+    as input — a rerun over fully-processed landings stays a no-op
+    either way."""
+    listed = list_landing(spark, landing_glob)
+    seen = read_ledger(out_dir)
+    new = [p for p in listed if p not in seen]
+    if not new:
+        if require_input and not listed:
+            raise _no_input(landing_glob)
+        return 0
+    raw = read_raw_json(spark, [glob_escape(p) for p in new])
     # quirk Q3: data_referencia is a string; dt partition derives from it
-    silver = bronze_to_silver(fresh, processed_at=processed_at).withColumn(
+    silver = bronze_to_silver(raw, processed_at=processed_at).withColumn(
         "dt", F.substring("data_referencia", 1, 10)
-    )
-    silver.cache()
-    n = silver.count()
-    if n:
-        # ONE atomic commit per ingest batch (Delta transaction when
-        # delta-spark is present, txlog manifest otherwise): readers
-        # never observe a half-appended Silver, and every batch is a
-        # time-travelable version (reference S5, `2:65`). The txn
-        # marker makes the append IDEMPOTENT on the batch identity (the
-        # sorted new-source-file list): a crash between the commit and
-        # record_ingested re-runs the same batch on restart, and
-        # without the marker it would append the same rows twice
-        # (ADVICE r8; mirrors stream_silver_available_now). Residual,
-        # documented: if NEW files also land before the rerun, the
-        # batch identity changes and the crashed batch's rows duplicate
-        # — closing that needs the ledger folded into the same commit.
-        counts = silver.groupBy("_source_file").agg(F.count(F.lit(1)).alias("n_rows"))
-        batch_files = sorted(r[0] for r in counts.select("_source_file").collect())
-        # Batch identity lives in the APP ID, not the version: Delta's
-        # txnAppId/txnVersion contract skips any write whose version is
-        # <= the last recorded one per appId, so hash-derived versions
-        # under ONE appId would silently drop ~half of all legitimate
-        # new batches (ADVICE r9 high). Scoping the digest into the
-        # appId (like stream_silver's stream-identity appId) makes a
-        # replay an exact (appId, 0) repeat — skipped — while every new
-        # batch gets a fresh appId with no prior version — applied.
-        digest = hashlib.sha256("\n".join(batch_files).encode()).hexdigest()
-        write_history(
-            silver.drop("_source_file"),
-            silver_path(out_dir),
-            partition_by=["dt"],
-            txn=(f"run_silver:{digest}", 0),
+    ).cache()
+    try:
+        # corrupt-only input counts as empty — unless earlier files were
+        # ledgered, which proves the landing held valid snapshots
+        if require_input and len(new) == len(listed) and raw.isEmpty():
+            raise _no_input(landing_glob)
+        counts = silver.groupBy("_source_file").agg(
+            F.count(F.lit(1)).alias("n_rows")
         )
-        record_ingested(out_dir, counts)
-    silver.unpersist()
-    return n
+        per_file = counts.collect()  # one job: also fills the Silver cache
+        n = sum(r["n_rows"] for r in per_file)
+        if n:
+            # ONE atomic commit per ingest batch (Delta transaction when
+            # delta-spark is present, txlog manifest otherwise): readers
+            # never observe a half-appended Silver, and every batch is a
+            # time-travelable version (reference S5, `2:65`). The txn
+            # marker makes the append IDEMPOTENT on the batch identity (the
+            # sorted new-source-file list): a crash between the commit and
+            # record_ingested re-runs the same batch on restart, and
+            # without the marker it would append the same rows twice
+            # (ADVICE r8; mirrors stream_silver_available_now). Residual,
+            # documented: if NEW files also land before the rerun, the
+            # batch identity changes and the crashed batch's rows duplicate
+            # — closing that needs the ledger folded into the same commit.
+            batch_files = sorted(r["_source_file"] for r in per_file)
+            # Batch identity lives in the APP ID, not the version: Delta's
+            # txnAppId/txnVersion contract skips any write whose version is
+            # <= the last recorded one per appId, so hash-derived versions
+            # under ONE appId would silently drop ~half of all legitimate
+            # new batches (ADVICE r9 high). Scoping the digest into the
+            # appId (like stream_silver's stream-identity appId) makes a
+            # replay an exact (appId, 0) repeat — skipped — while every new
+            # batch gets a fresh appId with no prior version — applied.
+            digest = hashlib.sha256("\n".join(batch_files).encode()).hexdigest()
+            write_history(
+                silver.drop("_source_file"),
+                silver_path(out_dir),
+                partition_by=["dt"],
+                txn=(f"run_silver:{digest}", 0),
+            )
+            record_ingested(out_dir, counts)
+        return n
+    finally:
+        silver.unpersist()
+        raw.unpersist()
+
+
+def _no_input(landing_glob: str) -> FileNotFoundError:
+    return FileNotFoundError(
+        f"landing glob {landing_glob!r} matched no snapshot files "
+        "(reference S10 validation gate; pass require_input=False "
+        "to allow an empty landing)"
+    )
 
 
 def run_gold(
     spark: SparkSession, out_dir: str, analysis_at: str | None = None
 ) -> dict[str, DataFrame]:
-    """Silver -> Gold: latest-snapshot view (cached once, reused by all
-    four analyses — fixes the reference's recompute pessimization) and the
-    dual history/serving sinks (quirk Q4)."""
+    """Silver -> Gold: latest-snapshot view (cached and materialized
+    once, reused by all four analyses — fixes the reference's recompute
+    pessimization) and the dual history/serving sinks (quirk Q4).
+
+    The four tables' sinks are independent tiny jobs, so they run
+    concurrently, one driver thread per table, and Spark schedules their
+    jobs side by side. Once every sink has finished, the error of the
+    first failed table (in ``GOLD_BUILDERS`` order) is re-raised."""
     silver = read_history(spark, silver_path(out_dir)).drop("dt")
     latest = latest_assets(silver)
-    gold: dict[str, DataFrame] = {}
-    for name, build in GOLD_BUILDERS.items():
-        df = build(latest, analysis_at=analysis_at)
-        write_history(
-            df,
-            os.path.join(out_dir, "gold", "history", name),
-            merge_schema=True,
-        )
-        formatted(df.write.mode("overwrite")).save(
-            os.path.join(out_dir, "gold", "serving", name)
-        )
-        gold[name] = df
-    latest.unpersist()
+    try:
+        latest.count()
+        gold = {
+            name: build(latest, analysis_at=analysis_at)
+            for name, build in GOLD_BUILDERS.items()
+        }
+
+        def sink(name: str, df: DataFrame) -> None:
+            write_history(
+                df,
+                os.path.join(out_dir, "gold", "history", name),
+                merge_schema=True,
+            )
+            formatted(df.write.mode("overwrite")).save(
+                os.path.join(out_dir, "gold", "serving", name)
+            )
+
+        # inheritable_thread_target carries the caller's job group, local
+        # properties and tags into the worker thread; wrapping once per
+        # task gives each thread its own copy of the properties
+        with ThreadPoolExecutor(max_workers=len(gold)) as pool:
+            futures = [
+                pool.submit(inheritable_thread_target(spark)(sink), name, df)
+                for name, df in gold.items()
+            ]
+            for f in futures:
+                f.result()
+    finally:
+        latest.unpersist()
     return gold
 
 

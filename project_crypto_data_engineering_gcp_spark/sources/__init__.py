@@ -7,7 +7,7 @@ from .json_source import (
     write_raw_snapshot,
 )
 from .http_source import default_fetcher, fixture_fetcher, ingest_snapshot
-from .ledger import filter_new_files, read_ledger, record_ingested
+from .ledger import read_ledger, record_ingested
 from .sinks import (
     formatted,
     history_format,
@@ -28,7 +28,6 @@ __all__ = [
     "default_fetcher",
     "fixture_fetcher",
     "ingest_snapshot",
-    "filter_new_files",
     "read_ledger",
     "record_ingested",
     "formatted",

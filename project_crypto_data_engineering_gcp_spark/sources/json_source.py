@@ -73,26 +73,33 @@ def write_raw_snapshot(payload: dict, landing_dir: str) -> str:
     return path
 
 
-def read_raw_json(spark: SparkSession, glob: str) -> DataFrame:
-    """Multiline-JSON globbed scan with explicit schema (reference S4
-    `2:37-41`, minus the inference pass). One row per snapshot document;
-    ``input_file_name`` is exposed for the ingest ledger.
+def read_raw_json(spark: SparkSession, paths: str | list[str]) -> DataFrame:
+    """Multiline-JSON scan with explicit schema (reference S4 `2:37-41`,
+    minus the inference pass) over a glob or an explicit file list. One
+    row per snapshot document; ``input_file_name`` is exposed as
+    ``_source_file`` for the ingest ledger.
 
     PERMISSIVE parsing: a malformed document becomes one row with only
     ``_corrupt_record`` set — it is dropped here (and quarantined by
     :func:`read_corrupt_json`) rather than failing the whole batch, so
-    one bad upload can never wedge ingestion (the reference would throw)."""
+    one bad upload can never wedge ingestion (the reference would throw).
+
+    The returned frame is CACHED and owned by the caller, who unpersists
+    it when done. Spark refuses a JSON scan whose only referenced column
+    is the corrupt-record column (``count()``/``isEmpty()`` after this
+    filter would be one); materializing the cache reads every column, so
+    any later action is legal."""
     from pyspark.sql import functions as F
 
-    df = _read_permissive(spark, glob)
-    return df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
+    return (
+        _read_permissive(spark, paths)
+        .filter(F.col("_corrupt_record").isNull())
+        .drop("_corrupt_record")
+        .cache()
+    )
 
 
-def _read_permissive(spark: SparkSession, glob: str) -> DataFrame:
-    # Spark refuses to filter on the corrupt-record column straight off a
-    # JSON scan (SPARK-26243-adjacent restriction); caching the parsed
-    # frame is the documented unlock. Landing batches are small by design
-    # (one ~65 KB doc per snapshot), so the cache cost is negligible.
+def _read_permissive(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     from pyspark.sql import functions as F
 
     return (
@@ -100,19 +107,20 @@ def _read_permissive(spark: SparkSession, glob: str) -> DataFrame:
         .option("multiline", "true")
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(glob)
+        .json(paths)
         .withColumn("_source_file", F.input_file_name())
-        .cache()
     )
 
 
-def read_corrupt_json(spark: SparkSession, glob: str) -> DataFrame:
+def read_corrupt_json(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     """The quarantine view: source file + raw text of every document the
-    PERMISSIVE reader could not parse (for alerting / replay)."""
+    PERMISSIVE reader could not parse (for alerting / replay). The whole
+    parse is cached first, for the corrupt-record-only restriction above."""
     from pyspark.sql import functions as F
 
     return (
-        _read_permissive(spark, glob)
+        _read_permissive(spark, paths)
+        .cache()
         .filter(F.col("_corrupt_record").isNotNull())
         .select("_source_file", "_corrupt_record")
     )

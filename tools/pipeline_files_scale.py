@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Amplified-FILE-COUNT rehearsal for the medallion control plane
 (r11 verdict task 5): the per-query scale sweeps amplify ROWS, but
-`run_pipeline`'s own costs — glob listing, ledger anti-join, Silver
+`run_pipeline`'s own costs — glob listing, ledger lookup, Silver
 txlog commit, Gold rebuild — scale with the number of landed snapshot
 FILES (the reference's accumulated-unread-files semantics,
 `2-spark_processed_assats_list.py:37,76-87`). This tool measures them
@@ -12,11 +12,10 @@ at x1/x10/x100 file counts directly:
                    shape; also the worst-case txlog batch).
   incr_ingest_sec  +1 new file against a fully-ledgered landing — the
                    steady-state per-batch overhead a poller pays: the
-                   glob still lists EVERY file, the ledger anti-join
-                   runs against the full history, the commit appends
-                   one file's rows.
+                   driver lists every file and subtracts the ledger's
+                   path set, then parses and commits only the new file.
   noop_sec         rerun with nothing new — the pure control-plane
-                   floor (list + ledger + early-out).
+                   floor (list + ledger read + early-out, no Spark job).
   gold_sec         full Gold rebuild reading the whole Silver history.
 
 Snapshots are synthesized 6h apart so the Silver dt-partition count
